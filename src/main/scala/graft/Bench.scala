@@ -11,10 +11,6 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bench measures the cluster posture: routed operators (q11_cc)
-      // take their scale path here; Verify leaves the flag unset so the
-      // oracle gates the local/deterministic path of the same operators
-      .config("spark.graft.scale", "cluster")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: run every query once at the smallest SF so JIT/codegen
@@ -138,16 +134,13 @@ object Bench {
     }
     val probes = scala.collection.mutable.LinkedHashMap
       .empty[String, (Long, Long, Long)]
-    val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
+    val firstPass = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val runs = RunTimer.runs(3)(fn(spark, sfDir).count())
       resetCacheState()
       probes(name) = (tmpShuffleMb(), heapMb(), codeCacheMb())
-      name -> times
+      name -> runs
     }.toMap
+    val results = RunTimer.timed(firstPass)
     val loadEnd = loadavg()
     // Contention guard (second pass): a committed artifact must never
     // carry a number 8x off steady state because the machine happened to
@@ -161,13 +154,19 @@ object Bench {
     // values under "reran" so a persistent-load run is self-evident.
     val suspects = results.filter { case (_, ts) =>
       ts.max / math.max(ts.min, 1e-9) > 2.5 || ts.min > 3.0 }
-    val rerun = suspects.map { case (name, _) =>
+    val rerunRuns = suspects.map { case (name, _) =>
       resetCacheState()
-      val t0 = System.nanoTime()
-      try { picked(name)(spark, sfDir).count() } catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> RunTimer.runs(1)(picked(name)(spark, sfDir).count())
     }
-    val finalTimes = results.map { case (n, ts) => n -> (ts ++ rerun.get(n)) }
+    val rerun = RunTimer.timed(rerunRuns).map { case (n, ts) => n -> ts.head }
+    val finalRuns = firstPass.map { case (n, r) =>
+      n -> rerunRuns.get(n).fold(r)(r ++ _) }
+    val finalTimes = RunTimer.timed(finalRuns)
+    // a query with a failed run is reported here, loudly; its failed
+    // runs never entered the min, median or total above
+    val errors = RunTimer.errors(finalRuns)
+    errors.foreach { case (q, e) => System.err.println(s"[bench] $q FAILED: $e") }
+    val errorsJson = RunTimer.errorsJson(errors)
     def jmap(f: Seq[Double] => Double) = finalTimes
       .map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val qs = jmap(_.min)
@@ -179,7 +178,7 @@ object Bench {
       f""""$k":{"first_min":${results(k).min}%.3f,"rerun":$v%.3f}"""
     }.mkString("{", ",", "}")
     val total = finalTimes.values.map(_.min).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$med,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":$med,"sf":"$sfDir","errors":$errorsJson}""")
     // The durable bench artifact is a ~2KB TAIL of stdout, so the last
     // line must carry the steady-state signal: mins sorted ascending
     // (the expensive queries — the ones adjudication needs — sit at the
@@ -212,7 +211,8 @@ object Bench {
          |"queries":$qs,
          |"queries_median":$med,
          |"reran":$reranJson,
-         |"probe":$probeJson}""".stripMargin
+         |"probe":$probeJson,
+         |"errors":$errorsJson}""".stripMargin
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full)
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }

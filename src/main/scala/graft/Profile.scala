@@ -24,7 +24,6 @@ object Profile {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.scale", "cluster")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger; val stages = new AtomicInteger
@@ -78,16 +77,12 @@ object Profile {
         spark.sparkContext.setJobDescription(name)
         val j0 = jobs.get; val s0 = stages.get
         val t0c = tasks.get; val tt0 = taskTimeMs.get
-        val t0 = System.nanoTime()
-        // a failed run must not win minBy with a near-zero wall time
-        // (r18 ADVICE): mark it infinite so failures are visible and
-        // can never masquerade as the best-of-N timing
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[$name] ERROR ${e.getMessage}"); false }
-        val wall =
-          if (ok) (System.nanoTime() - t0) / 1e9
-          else Double.PositiveInfinity
+        // a failed run is infinite, so it can never win minBy
+        val wall = RunTimer.time(fn(spark, sfDir).count()) match {
+          case Right(secs) => secs
+          case Left(e) =>
+            System.err.println(s"[$name] ERROR $e"); Double.PositiveInfinity
+        }
         (wall, jobs.get - j0, stages.get - s0, tasks.get - t0c,
           (taskTimeMs.get - tt0) / 1e3)
       }.minBy(_._1)

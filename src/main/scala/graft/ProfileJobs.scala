@@ -25,7 +25,6 @@ object ProfileJobs {
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.graft.scale", "cluster")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -1,7 +1,10 @@
 package graft.enrich
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+import graft.ops.Bounded
 import graft.ops.Pin._
 
 /** Iterative graph analytics on the edge-list representation — the
@@ -139,43 +142,20 @@ object Analytics {
   }
 
   def stronglyConnected(edges: DataFrame,
-      localThreshold: Int = 200000): DataFrame = {
-    // r13: the q77 probe discipline applied to the WHOLE operator — a
-    // graph under the probe threshold skips the distributed trim AND
-    // the coloring loop entirely: the driver-local Tarjan kernel labels
-    // everything in one pass (min-member labels, exactly what the loop
-    // converges to; duplicate edge rows are harmless to Tarjan, so the
-    // probe reads the RAW edges — r19: a partial executeTake scan, never
-    // the distinct+repartition+pin the fallback needs). At cluster scale
-    // the probe misses and the trim + Orzan loop below (with a post-trim
-    // core probe) carry the work. String-keyed graphs only (the kernel's
-    // key type) — others take the loop unconditionally.
-    def tarjanAll(pairs: Array[(String, String)]): DataFrame = {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val m = tarjanNontrivial(pairs)
-      pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-        .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
-    }
-    brandesProbe(edges, localThreshold).foreach(arr => return tarjanAll(arr))
+      localThreshold: Int = Bounded.threshold): DataFrame = {
+    // duplicate edge rows are harmless to Tarjan, so the probe reads the
+    // RAW edges — a partial scan, never the distinct+repartition+pin the
+    // fallback needs
+    tarjanProbe(edges, localThreshold).foreach(return _)
     // eager: sccTrim's first layer reads e0 along the src- and
     // dst-distinct branches of one job — lazy duplicated the distinct
     val e0 = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).pin(eager = true)
-    val isStringKeyed = e0.schema.head.dataType ==
-      org.apache.spark.sql.types.StringType
     val (trimmed, eTrim, remTrim) = sccTrim(e0)
     // post-trim probe: the acyclic periphery is gone, so the surviving
     // cyclic core may fit the kernel even when the full graph did not
-    if (isStringKeyed) {
-      val probe = eTrim.limit(localThreshold + 1)
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      if (probe.length <= localThreshold) {
-        val core = tarjanAll(probe)
-        return trimmed.fold(core)(t =>
-          t.select(col("v"), col("c").as("scc")).unionByName(core))
-      }
-    }
+    tarjanProbe(eTrim, localThreshold)
+      .foreach(core => return withTrimmed(trimmed, core))
     var e = eTrim
     var rem = remTrim
     var result: Option[DataFrame] = trimmed
@@ -279,9 +259,7 @@ object Analytics {
   }
 
   /** Iterative Tarjan over a driver-local edge list — the kernel of the
-    * incremental-SCC local path (the c3 discipline: a bounded probe
-    * collects the delta-sized affected subgraph; anything bigger takes
-    * the distributed fallback). Returns (member → min-member label) for
+    * SCC operators' driver arms. Returns (member → min-member label) for
     * NON-TRIVIAL classes only — singletons keep their previous label via
     * the caller's coalesce. Explicit stack, no recursion. */
   private[enrich] def tarjanNontrivial(
@@ -374,7 +352,8 @@ object Analytics {
     * rounds = condensation depth; SCC only on the (tiny) affected
     * subgraph; one broadcast-sized relabel join over the label table. */
   def stronglyConnectedIncremental(newEdges: DataFrame, prev: DataFrame,
-      prevCond: DataFrame, localThreshold: Int = 200000): DataFrame = {
+      prevCond: DataFrame,
+      localThreshold: Int = Bounded.threshold): DataFrame = {
     val spark = newEdges.sparkSession
     val e = newEdges.select(col("src"), col("dst"))
     val prevL = prev.select(col("v"), col("scc"))
@@ -415,20 +394,16 @@ object Analytics {
       .unionByName(newPairs)
       .repartition(col("src"))
       .pin(eager = false)
-    // r19: probe the AUGMENTED quotient graph itself first (the c3
-    // discipline one level up): its nontrivial SCCs ARE the merge
-    // classes (prevCond alone is a DAG, so every nontrivial class
-    // contains a new pair whole — the same argument that justifies the
-    // fwd bound below), so when aug fits the driver kernel the two
-    // distributed BFS passes buy nothing a one-pass local Tarjan
-    // doesn't give. At scale the condensation is corpus-sized, the
-    // probe misses, and the BFS-bounded region path carries the work.
-    val augProbe = aug.limit(localThreshold + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    if (augProbe.length <= localThreshold) {
-      import spark.implicits._
-      return relabel(tarjanNontrivial(augProbe).toSeq.toDF("c", "_m"))
-    }
+    import spark.implicits._
+    // probe the AUGMENTED quotient graph itself first: its nontrivial
+    // SCCs ARE the merge classes (prevCond alone is a DAG, so every
+    // nontrivial class contains a new pair whole — the same argument
+    // that justifies the fwd bound below), so when aug fits the two
+    // distributed BFS passes buy nothing a one-pass Tarjan doesn't give.
+    // At scale the condensation is corpus-sized and the BFS-bounded
+    // region path carries the work.
+    stringEdges(aug, localThreshold).foreach(arr =>
+      return relabel(tarjanNontrivial(arr).toSeq.toDF("c", "_m")))
     // forward reach from the new heads bounds every possible merge: a
     // nontrivial SCC of aug must contain a new pair (the condensation
     // alone is a DAG), so all its nodes are forward-reachable from some
@@ -441,15 +416,10 @@ object Analytics {
       .join(fwd.withColumnRenamed("v", "dst"), Seq("dst"))
       .select(col("src"), col("dst"))
     // merge classes: driver-local Tarjan when the affected subgraph is
-    // delta-sized (the c3 kernel discipline — bounded probe, distributed
-    // fallback above the threshold, identical labels either way)
-    val probe = subF.limit(localThreshold + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val merged: DataFrame =
-      if (probe.length <= localThreshold) {
-        import spark.implicits._
-        tarjanNontrivial(probe).toSeq.toDF("c", "_m")
-      } else {
+    // delta-sized
+    val merged: DataFrame = stringEdges(subF, localThreshold)
+      .map(arr => tarjanNontrivial(arr).toSeq.toDF("c", "_m"))
+      .getOrElse {
         // distributed: shrink further with a backward pass confined to
         // the fwd-induced subgraph (cycle nodes lie on both sides), then
         // run the full coloring SCC on the region-induced subgraph
@@ -469,14 +439,6 @@ object Analytics {
     relabel(merged)
   }
 
-  /** Routing twin of [[connectedComponentsAuto]]: the DataFrame coloring
-    * loop locally, the Pregel path under `spark.graft.scale=cluster`
-    * (the flag Bench sets) — both share the oracle. */
-  def stronglyConnectedAuto(s: SparkSession, edges: DataFrame): DataFrame =
-    if (s.conf.getOption("spark.graft.scale").contains("cluster"))
-      stronglyConnectedGraphX(s, edges)
-    else stronglyConnected(edges)
-
   /** CONDENSATION of a directed graph: contract every SCC
     * ([[stronglyConnected]]) to one node and keep the distinct
     * non-self label pairs — the DAG downstream cycle-aware processing
@@ -484,7 +446,7 @@ object Analytics {
     * One edge double-join against the label table + a distinct — the
     * [[connectedComponentsIncremental]] contraction shape. */
   def condensation(edges: DataFrame): DataFrame =
-    condensationFrom(edges, stronglyConnectedAuto(edges.sparkSession, edges))
+    condensationFrom(edges, stronglyConnected(edges))
 
   /** [[condensation]] over ALREADY-DERIVED labels (the persisted
     * `scclabels` table at scale — labels derive once per corpus
@@ -505,50 +467,45 @@ object Analytics {
     * path (in condensed edges) into component C — the stage number a
     * cycle-aware scheduler runs C at (stage 0 components have no
     * cross-SCC dependencies). SCC labels come from
-    * [[stronglyConnectedAuto]] once; the condensed edge set is one edge
+    * [[stronglyConnected]] once; the condensed edge set is one edge
     * double-join + distinct; then max-plus relaxation to fixpoint —
     * rounds = condensation depth (2 on the gate fixture BY
     * CONSTRUCTION), each one equi join + max groupBy on the (tiny)
     * component table. Every component reports, including isolated
     * ones (layer 0). The oracle unrolls the identical recurrence. */
   def condensationLayers(edges: DataFrame): DataFrame =
-    condensationLayersFrom(edges,
-      stronglyConnectedAuto(edges.sparkSession, edges))
+    condensationLayersFrom(edges, stronglyConnected(edges))
 
   /** [[condensationLayersFrom]] over an ALREADY-DERIVED condensation —
     * the r12 deployment shape: labels AND condensation persist per
     * corpus version (`scclabels`/`scccond`), so the relaxation loop
     * reads two parquet scans and touches the base graph zero times. */
   def condensationLayersOver(condEdges: DataFrame,
-      scc0: DataFrame, localThreshold: Int = 200000): DataFrame = {
-    // r19: both inputs are bounded probes (condensation edges + DISTINCT
-    // labels — never the corpus-sized vertex table), so at gate scale the
-    // max-plus fixpoint runs as one driver pass of exact longs; at 100 TB
-    // either probe misses and the relaxation loop below carries the work.
+      scc0: DataFrame, localThreshold: Int = Bounded.threshold): DataFrame = {
+    // both probes read condensation edges + DISTINCT labels — never the
+    // corpus-sized vertex table
     val spark = condEdges.sparkSession
-    brandesProbe(condEdges.select(col("src_scc").as("src"),
-        col("dst_scc").as("dst")), localThreshold).foreach { ceArr =>
-      val labs = scc0.select(col("scc")).distinct()
-        .limit(localThreshold + 1).collect().map(_.getString(0))
-      if (labs.length <= localThreshold) {
-        import spark.implicits._
-        val layer = scala.collection.mutable.HashMap.empty[String, Long]
-        labs.foreach(l => layer(l) = 0L)
-        var changed = true
-        while (changed) {
-          changed = false
-          val upd = scala.collection.mutable.HashMap.empty[String, Long]
-          for ((cs, cd) <- ceArr; l <- layer.get(cs)) {
-            val c = l + 1
-            if (c > upd.getOrElse(cd, Long.MinValue)) upd(cd) = c
-          }
-          for ((c, v) <- upd)
-            if (v > layer.getOrElse(c, Long.MinValue)) {
-              layer(c) = v; changed = true
-            }
+    for (ceArr <- stringEdges(condEdges.select(col("src_scc").as("src"),
+           col("dst_scc").as("dst")), localThreshold);
+         labs <- Bounded.collect(scc0.select(col("scc")).distinct(),
+           localThreshold)) {
+      import spark.implicits._
+      val layer = scala.collection.mutable.HashMap.empty[String, Long]
+      labs.foreach(l => layer(l.getString(0)) = 0L)
+      var changed = true
+      while (changed) {
+        changed = false
+        val upd = scala.collection.mutable.HashMap.empty[String, Long]
+        for ((cs, cd) <- ceArr; l <- layer.get(cs)) {
+          val c = l + 1
+          if (c > upd.getOrElse(cd, Long.MinValue)) upd(cd) = c
         }
-        return layer.toSeq.toDF("scc", "layer")
+        for ((c, v) <- upd)
+          if (v > layer.getOrElse(c, Long.MinValue)) {
+            layer(c) = v; changed = true
+          }
       }
+      return layer.toSeq.toDF("scc", "layer")
     }
     layersLoop(
       condEdges.select(col("src_scc").as("cs"), col("dst_scc").as("cd"))
@@ -597,25 +554,14 @@ object Analytics {
     * convention) so all three spellings — coloring loop, Pregel, oracle
     * closure — agree on the min-member label. */
   def stronglyConnectedGraphX(spark: SparkSession, edges: DataFrame,
-      numIter: Int = 12, localThreshold: Int = 200000): DataFrame = {
+      numIter: Int = 12, localThreshold: Int = Bounded.threshold): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     import spark.implicits._
-    // r19: the DF path's PRE-trim probe, ported (the c3 discipline —
-    // bounded probe, distributed fallback): when the WHOLE graph fits
-    // the driver kernel, the distributed trim's per-layer distinct/join
-    // rounds (~25 AQE stage round-trips on the gate fixture) buy
-    // nothing a one-pass local Tarjan doesn't already give. The probe
-    // reads the RAW edges (a partial executeTake scan — duplicates are
-    // harmless to Tarjan), so the distinct+repartition+pin below is
-    // only ever built for the distributed arm. At cluster scale
-    // limit(k+1) pulls at most k+1 rows, the probe misses, and trim +
-    // Pregel carry the work; specs force the Pregel arm via
-    // localThreshold = 0.
-    brandesProbe(edges, localThreshold).foreach { arr =>
-      val m = tarjanNontrivial(arr)
-      return arr.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-        .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
-    }
+    // the DF path's pre-trim probe on the RAW edges: when the whole graph
+    // fits, the trim's per-layer distinct/join rounds (~25 AQE stage
+    // round-trips on the gate fixture) buy nothing a one-pass Tarjan
+    // doesn't give
+    tarjanProbe(edges, localThreshold).foreach(return _)
     // the same TRIM pre-pass as the DataFrame path: the DAG periphery
     // (most of the fixture) never enters Pregel at all
     // eager: sccTrim's first layer reads e0 along the src- and
@@ -627,25 +573,11 @@ object Analytics {
       return trimmed.map(_.select(col("v"), col("c").as("scc")))
         .getOrElse(e0.sparkSession.emptyDataFrame
           .select(lit("").as("v"), lit("").as("scc")).limit(0))
-    // r16 (verdict task #3): the DF path's POST-TRIM driver-Tarjan core
-    // probe, ported — after the periphery peel the surviving cyclic core
-    // is usually tiny, and Pregel's per-superstep job overhead dwarfs a
-    // one-pass local Tarjan on it. At cluster scale the probe misses
-    // (limit(k+1) pulls at most k+1 rows, never the graph) and Pregel
-    // carries the work; specs force the Pregel arm via localThreshold=0.
-    if (core.schema.head.dataType ==
-        org.apache.spark.sql.types.StringType) {
-      val probe = core.limit(localThreshold + 1)
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      if (probe.length <= localThreshold) {
-        val m = tarjanNontrivial(probe)
-        val coreLabeled = probe.iterator
-          .flatMap(p => Iterator(p._1, p._2)).toSet
-          .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
-        return trimmed.fold(coreLabeled)(t =>
-          t.select(col("v"), col("c").as("scc")).unionByName(coreLabeled))
-      }
-    }
+    // the DF path's post-trim core probe: after the periphery peel the
+    // surviving cyclic core is usually tiny, and Pregel's per-superstep
+    // job overhead dwarfs a one-pass Tarjan on it
+    tarjanProbe(core, localThreshold)
+      .foreach(c => return withTrimmed(trimmed, c))
     val keyed = core.select(
       xxhash64(col("src")).as("sid"), col("src"),
       xxhash64(col("dst")).as("did"), col("dst")).cache()
@@ -713,10 +645,10 @@ object Analytics {
     * radius: (h, nf = Σ_v |B_h(v)| estimate, reached_frac vs h=rounds).
     * N(h)'s growth curve is the effective-diameter instrument. */
   def anf(edges: DataFrame, rounds: Int, m: Int = 16,
-      localThreshold: Int = 200000): DataFrame = {
+      localThreshold: Int = Bounded.threshold): DataFrame = {
     require(m == 16, "alpha is pinned for m = 16 (0.673)")
     require(rounds >= 1 && rounds <= 12, s"anf rounds $rounds out of budget")
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    stringEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return anfLocal(arr, rounds, m).toDF("h", "nf")
@@ -1046,13 +978,13 @@ object Analytics {
     * (Only equal when the DataFrame loop also converges within its
     * maxIter — true for any graph with diameter ≤ 20.) */
   def connectedComponentsGraphX(spark: SparkSession, edges: DataFrame,
-      localThreshold: Int = 200000): DataFrame = {
+      localThreshold: Int = Bounded.threshold): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     import spark.implicits._
-    // the DF arm's bounded probe, ported (the stronglyConnectedGraphX
-    // r19 shape): min-label union-find IS the Pregel + component-min
-    // relabel fixpoint; Pregel carries the work when the probe misses
-    ccProbeLocal(edges, localThreshold).foreach(return _)
+    // the DF arm's probe: min-label union-find IS the Pregel +
+    // component-min relabel fixpoint
+    unionFindProbe(edges.select(col("src"), col("dst")), localThreshold)
+      .foreach(return _)
     val keyed = edges.select(
       xxhash64(col("src")).as("sid"), col("src"),
       xxhash64(col("dst")).as("did"), col("dst")).cache()
@@ -1077,8 +1009,9 @@ object Analytics {
     * fixpoint is reached once `iterations` ≥ graph depth from the source;
     * the oracle unrolls the identical min-plus recurrence. */
   def bfsDistances(edges: DataFrame, source: String,
-      iterations: Int = 10, localThreshold: Int = 200000): DataFrame = {
-    brandesProbe(edges, localThreshold).foreach { arr =>
+      iterations: Int = 10,
+      localThreshold: Int = Bounded.threshold): DataFrame = {
+    stringEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return bfsLocal(arr, Seq(source), iterations)
@@ -1129,8 +1062,9 @@ object Analytics {
     * depth, or earlier when a frontier empties) is identical to the
     * min-then-sum recurrence the oracle unrolls. */
   def shortestPathCounts(edges: DataFrame, source: String,
-      iterations: Int = 10, localThreshold: Int = 200000): DataFrame = {
-    brandesProbe(edges, localThreshold).foreach { arr =>
+      iterations: Int = 10,
+      localThreshold: Int = Bounded.threshold): DataFrame = {
+    stringEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return brandesLocalState(arr, Seq(source), iterations)
@@ -1144,22 +1078,35 @@ object Analytics {
     sigmaLevels(e, src0, Seq("v"), iterations).reduce(_.unionByName(_))
   }
 
-  /** Bounded probe for the Brandes-family driver kernel (the c3 / SCC
-    * discipline): collect the edge list iff it fits `localThreshold`
-    * (string-keyed only); at cluster scale limit(k+1) pulls at most k+1
-    * rows, the probe misses, and the level-synchronous distributed
-    * passes carry the work. Specs force the distributed arm with
-    * localThreshold = 0. */
-  private def brandesProbe(edges: DataFrame,
-      localThreshold: Int): Option[Array[(String, String)]] = {
-    if (localThreshold <= 0) return None
+  /** [[Bounded.collect]] of `edges`' (src, dst) pairs for the kernels
+    * keyed by strings (Tarjan, the Brandes family, layers); any other
+    * key type takes the distributed arm. */
+  private def stringEdges(edges: DataFrame,
+      k: Int): Option[Array[(String, String)]] = {
     val e = edges.select(col("src"), col("dst"))
-    if (e.schema.head.dataType !=
-        org.apache.spark.sql.types.StringType) return None
-    val probe = e.limit(localThreshold + 1)
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    if (probe.length <= localThreshold) Some(probe) else None
+    if (e.schema.head.dataType != StringType) None
+    else Bounded.collect(e, k)
+      .map(_.map(r => (r.getString(0), r.getString(1))))
   }
+
+  /** Driver Tarjan labels (v, scc) for every vertex of `edges` when it
+    * fits the probe — min-member labels, exactly what the coloring loop
+    * and the Pregel twin converge to. */
+  private def tarjanProbe(edges: DataFrame, k: Int): Option[DataFrame] =
+    stringEdges(edges, k).map { pairs =>
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val m = tarjanNontrivial(pairs)
+      pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+        .toSeq.sorted.map(v => (v, m.getOrElse(v, v))).toDF("v", "scc")
+    }
+
+  /** SCC labels of a kernel-labeled core beside the singletons the trim
+    * pre-pass peeled. */
+  private def withTrimmed(trimmed: Option[DataFrame],
+      core: DataFrame): DataFrame =
+    trimmed.fold(core)(t =>
+      t.select(col("v"), col("c").as("scc")).unionByName(core))
 
   /** Driver-local Brandes state kernel — the exact recurrences of
     * [[sigmaLevels]] + [[backwardDeltas]] on a collected edge list, with
@@ -1322,8 +1269,8 @@ object Analytics {
     * @return (v, d, betweenness) — δ rounded to 6, for reachable vertices
     */
   def betweennessFromSource(edges: DataFrame, source: String,
-      depth: Int = 10, localThreshold: Int = 200000): DataFrame = {
-    brandesProbe(edges, localThreshold).foreach { arr =>
+      depth: Int = 10, localThreshold: Int = Bounded.threshold): DataFrame = {
+    stringEdges(edges, localThreshold).foreach { arr =>
       val spark = edges.sparkSession
       import spark.implicits._
       return brandesLocalState(arr, Seq(source), depth)
@@ -1367,10 +1314,10 @@ object Analytics {
     * the fused plan shares the per-source-replay oracle. Returns
     * (v, betweenness) for vertices reachable from ≥1 landmark. */
   def betweennessLandmarks(edges: DataFrame, sources: Seq[String],
-      depth: Int = 10, localThreshold: Int = 200000): DataFrame = {
+      depth: Int = 10, localThreshold: Int = Bounded.threshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    stringEdges(edges, localThreshold).foreach { arr =>
       // combine locally: per v, Σ over landmarks of round-6 δ (own-source
       // row excluded), rounded to 6 — the distributed groupBy's spelling;
       // round-6 quantization absorbs summation order exactly as it does
@@ -1411,10 +1358,10 @@ object Analytics {
     * replayable-float discipline). Returns (src, dst, ebtw) for DAG
     * edges reachable from ≥1 landmark. */
   def edgeBetweennessLandmarks(edges: DataFrame, sources: Seq[String],
-      depth: Int = 10, localThreshold: Int = 200000): DataFrame = {
+      depth: Int = 10, localThreshold: Int = Bounded.threshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    stringEdges(edges, localThreshold).foreach { arr =>
       // per-(s, edge-occurrence) round-10 terms summed per (src, dst),
       // rounded to 6 — the distributed e ⋈ state join's spelling, with
       // every duplicate edge row contributing exactly as the join does
@@ -1651,10 +1598,10 @@ object Analytics {
     * per landmark is identical to [[bfsDistances]], so per-landmark
     * oracles replay unchanged. */
   def bfsDistancesLandmarks(edges: DataFrame, sources: Seq[String],
-      iterations: Int, localThreshold: Int = 200000): DataFrame = {
+      iterations: Int, localThreshold: Int = Bounded.threshold): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    brandesProbe(edges, localThreshold).foreach { arr =>
+    stringEdges(edges, localThreshold).foreach { arr =>
       return bfsLocal(arr, sources, iterations).toDF("s", "v", "d")
     }
     val e = edges.select(col("src"), col("dst"))
@@ -2562,20 +2509,6 @@ object Analytics {
     labels.select(col("v"), col("c").as("community"))
   }
 
-  /** Routed connected components: the DataFrame min-label loop
-    * ([[connectedComponents]]) is the deterministic oracle path and the
-    * local default; under `spark.graft.scale=cluster` the GraphX
-    * pointer-jumping twin ([[connectedComponentsGraphX]]) runs instead —
-    * O(log n) rounds vs the loop's O(diameter), the difference that
-    * matters on a 100x-diameter graph. Both reach the same converged
-    * fixpoint and are gated against the same oracle SQL (q11_cc /
-    * q11_cc_gx), so the routing flag changes cost, never answers. */
-  def connectedComponentsAuto(s: SparkSession, edges: DataFrame,
-      maxIter: Int = 20): DataFrame =
-    if (s.conf.getOption("spark.graft.scale").contains("cluster"))
-      connectedComponentsGraphX(s, edges)
-    else connectedComponents(edges, maxIter)
-
   /** GraphX scale path for [[labelPropagation]] — SYNCHRONOUS modal-label
     * rounds via aggregateMessages with the SAME deterministic
     * (max count, min label) tie-break, so per-round labels are identical
@@ -2674,64 +2607,36 @@ object Analytics {
     * on the UNDIRECTED view of edges(src, dst). Deterministic; converges
     * in O(diameter) iterations. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      localThreshold: Int = 200000): DataFrame = {
-    ccProbeLocal(edges, localThreshold).foreach(return _)
+      localThreshold: Int = Bounded.threshold): DataFrame = {
+    unionFindProbe(edges.select(col("src"), col("dst")), localThreshold)
+      .foreach(return _)
     val und = undirectedView(edges)
     ccFrom(und, und.select(col("src").as("v")).distinct()
       .withColumn("component", col("v")), maxIter)
   }
 
-  /** Bounded probe + driver union-find for the CC arms (the SCC arm's
-    * c3 discipline): labels = class minimum, exactly the fixpoint of
-    * both the min-label propagation loop and the Pregel twin's
-    * component-min relabel. At cluster scale limit(k+1) pulls at most
-    * k+1 rows and the probe misses; specs force the distributed arms
-    * via localThreshold = 0. */
-  private def ccProbeLocal(edges: DataFrame,
-      localThreshold: Int): Option[DataFrame] = {
-    if (localThreshold <= 0) return None
-    val e = edges.select(col("src"), col("dst"))
-    val probe = e.limit(localThreshold + 1)
-      .collect().map(r => (r.get(0), r.get(1)))
-    if (probe.length > localThreshold) return None
-    val vt = e.schema.head.dataType
-    val rows = unionFindMin(probe).toSeq
-      .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-    Some(edges.sparkSession.createDataFrame(
-      new java.util.ArrayList(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v", vt),
-        org.apache.spark.sql.types.StructField("component", vt)))))
-  }
+  /** Driver union-find labels (v, component) of `edges`' first two
+    * columns when it fits the probe, in the source key type (string
+    * corpus keys, longs in specs): labels = class minimum, exactly the
+    * fixpoint of the min-label propagation loop and of the Pregel twin's
+    * component-min relabel. */
+  private def unionFindProbe(edges: DataFrame, k: Int): Option[DataFrame] =
+    Bounded.collect(edges, k).map { rows =>
+      val vt = edges.schema.head.dataType
+      val labels = unionFindMin(rows.map(r => (r.get(0), r.get(1))))
+      edges.sparkSession.createDataFrame(
+        labels.toSeq.map { case (a, b) => Row(a, b) }.asJava,
+        StructType(Seq(StructField("v", vt), StructField("component", vt))))
+    }
 
   /** [[connectedComponents]] for PAIR graphs known to be small relative
     * to the corpus (near-dup candidate pairs, LSH cluster edges): the
-    * q77/q59 probe discipline — a bounded `limit(k+1)` collect feeds
-    * the driver-local min-label union-find, the distributed fixpoint
-    * is the fallback above the threshold, identical labels either way
-    * (both converge to the class minimum). The win is rounds × job
-    * overhead on graphs whose edge count is a vanishing fraction of
-    * the corpus — exactly the near-dup shape, where |pairs| ≪ |docs|
-    * at any scale or the dedup would be removing most of the corpus. */
-  def connectedComponentsBounded(edges: DataFrame,
-      maxIter: Int = 20, localThreshold: Int = 200000): DataFrame = {
-    val e1 = edges.select(col("src"), col("dst"))
-      .pin(eager = true)
-    val probe = e1.limit(localThreshold + 1)
-      .collect().map(r => (r.get(0), r.get(1)))
-    if (probe.length <= localThreshold) {
-      val vt = e1.schema.head.dataType
-      val rows = unionFindMin(probe).toSeq
-        .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-      edges.sparkSession.createDataFrame(
-        new java.util.ArrayList(
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("v", vt),
-          org.apache.spark.sql.types.StructField("component", vt))))
-    } else connectedComponents(e1, maxIter)
-  }
+    * input is pinned once so the probe and, above the threshold, the
+    * distributed fixpoint read it without recomputing it. */
+  def connectedComponentsBounded(edges: DataFrame, maxIter: Int = 20,
+      localThreshold: Int = Bounded.threshold): DataFrame =
+    connectedComponents(edges.select(col("src"), col("dst"))
+      .pin(eager = true), maxIter, localThreshold)
 
   /** Incremental CC by CONTRACTION — the D5 carry-forward discipline
     * applied to analytics: after edges were added, map every edge to
@@ -2749,7 +2654,7 @@ object Analytics {
     * provably EQUALS the full recomputation — the gate shares q11's
     * oracle. */
   def connectedComponentsIncremental(edges: DataFrame, prev: DataFrame,
-      maxIter: Int = 20, localThreshold: Int = 200000): DataFrame = {
+      maxIter: Int = 20, localThreshold: Int = Bounded.threshold): DataFrame = {
     // DIRECTED edges suffice here (r13 — the q59 drift fix): the label
     // mapping only needs each edge's endpoint pair once, and the
     // contracted graph is re-undirected inside ccFrom anyway. The old
@@ -2771,30 +2676,14 @@ object Analytics {
       .distinct()
       .pin(eager = true)
     // merge classes over the contracted label graph — delta-bounded by
-    // the incremental premise, so a driver-local UNION-FIND kernel
-    // (min-label union, the q77 Tarjan-probe discipline: bounded
-    // limit(k+1) probe, distributed fallback above it, identical labels
-    // either way) replaces rounds of checkpointed fixpoint jobs whose
-    // per-round overhead dominated at this graph size (r13).
-    val probe = contracted.limit(localThreshold + 1)
-      .collect().map(r => (r.get(0), r.get(1)))
-    val merged: DataFrame =
-      if (probe.length <= localThreshold) {
-        // label type follows the caller's vertex type (string corpus
-        // keys here, longs in specs) — rebuild with the source schema
-        val vt = contracted.schema.head.dataType
-        val rows = unionFindMin(probe).toSeq
-          .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-        edges.sparkSession.createDataFrame(
-          new java.util.ArrayList(
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("v", vt),
-            org.apache.spark.sql.types.StructField("component", vt))))
-      } else ccFrom(undirectedView(contracted),
+    // the incremental premise, so the driver union-find replaces rounds
+    // of checkpointed fixpoint jobs whose per-round overhead dominated
+    // at this graph size (r13)
+    val merged: DataFrame = unionFindProbe(contracted, localThreshold)
+      .getOrElse(ccFrom(undirectedView(contracted),
         contracted.select(col("src").as("v"))
           .union(contracted.select(col("dst").as("v"))).distinct()
-          .withColumn("component", col("v")), maxIter)
+          .withColumn("component", col("v")), maxIter))
     // merged: (v = old label, component = new min label) → relabel
     seed
       .join(broadcast(merged
@@ -3085,7 +2974,8 @@ object Analytics {
     * explicit budgets with LOUD require failures (the q65/q67/q68
     * discipline), matched by the oracle's unroll. */
   def boruvkaMsf(edges: DataFrame, maxRounds: Int = 6,
-      propHops: Int = 12, localThreshold: Int = 200000): DataFrame = {
+      propHops: Int = 12,
+      localThreshold: Int = Bounded.threshold): DataFrame = {
     val spark = edges.sparkSession
     val e0 = edges.select(
         least(col("src"), col("dst")).as("src"),
@@ -3126,24 +3016,11 @@ object Analytics {
         val mg = mg0.unionByName(
             mg0.select(col("b").as("a"), col("a").as("b")))
           .distinct().pin(eager = true)
-        // merge-class labels: the bounded driver union-find kernel (r13,
-        // the q59 discipline — the merge graph has ≤ one pair per
+        // merge-class labels: the merge graph has ≤ one pair per
         // component, so from round 1 on it is far below the threshold
-        // even at cluster scale); distributed min-label propagation is
-        // the fallback above it, identical labels (class minimum)
-        val mgProbe = mg.limit(localThreshold + 1)
-          .collect().map(r => (r.get(0), r.get(1)))
-        val lbl: DataFrame = if (mgProbe.length <= localThreshold) {
-          val vt = mg.schema.head.dataType
-          val rows = unionFindMin(mgProbe).toSeq
-            .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-          spark.createDataFrame(
-            new java.util.ArrayList(
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("c", vt),
-              org.apache.spark.sql.types.StructField("lbl", vt))))
-        } else {
+        // even at cluster scale
+        val lbl: DataFrame = unionFindProbe(mg, localThreshold)
+          .map(_.toDF("c", "lbl")).getOrElse {
           var l0 = mg.select(col("a").as("c")).distinct()
             .withColumn("lbl", col("c")).pin(eager = false)
           // THREE hops per materialization (the ccFrom amortization):

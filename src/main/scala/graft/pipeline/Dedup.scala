@@ -415,9 +415,8 @@ object Dedup {
       threshold: Double): DataFrame = {
     val pairs = minhashLshPairs(docs, k, numHashes, bands, threshold)
       .select(col("a").as("src"), col("b").as("dst"))
-    // bounded driver union-find kernel (r13): near-dup pair graphs are
-    // a vanishing fraction of the corpus by construction, so the q59
-    // probe discipline applies — distributed fallback above 200k pairs
+    // near-dup pair graphs are a vanishing fraction of the corpus by
+    // construction, so they usually fit the driver union-find kernel
     val cc = graft.enrich.Analytics.connectedComponentsBounded(pairs)
       .select(col("v").as("doc_id"), col("component").as("keeper"))
     docs.select(col("doc_id")).join(cc, Seq("doc_id"), "left")

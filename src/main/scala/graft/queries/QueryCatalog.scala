@@ -1424,7 +1424,7 @@ object QueryCatalog {
     * closure, scc(u) = min v with u→*v ∧ v→*u (self included via the
     * closure seed). */
   val q61Scc: Q = (s, d) =>
-    graft.enrich.Analytics.stronglyConnectedAuto(s, GraphTables.sccRings(s, d))
+    graft.enrich.Analytics.stronglyConnected(GraphTables.sccRings(s, d))
 
   /** q61_gx — the GraphX twin (Pregel SCC + component-min relabel),
     * same oracle. */
@@ -1589,7 +1589,7 @@ object QueryCatalog {
     * converges in ≤6 (its diameter), and the fixpoint is stable, so the
     * Spark until-no-change loop and the fixed unroll land identically. */
   val q11Cc: Q = (s, d) =>
-    graft.enrich.Analytics.connectedComponentsAuto(s, GraphTables.hierarchy(s, d))
+    graft.enrich.Analytics.connectedComponents(GraphTables.hierarchy(s, d))
 
   /** q59 — INCREMENTAL connected components by CONTRACTION
     * ([[graft.enrich.Analytics.connectedComponentsIncremental]]): a
@@ -1646,9 +1646,8 @@ object QueryCatalog {
         numPlanes = 32, bands = 4, maxBucket = 4096)
       .select(col("a").as("src"), col("b").as("dst"))
     // the pair graph is tiny by construction (bucket-capped LSH
-    // pairs), so the bounded driver union-find kernel (r13 — the q59
-    // probe discipline, distributed fallback above 200k pairs) replaces
-    // rounds of fixpoint jobs; labels identical (class minimum)
+    // pairs), so the driver union-find kernel replaces rounds of
+    // fixpoint jobs; labels identical (class minimum)
     val cc = graft.enrich.Analytics.connectedComponentsBounded(pairs)
       .select(col("v").as("vec_id"), col("component").as("keeper"))
     emb.select(col("vec_id")).join(cc, Seq("vec_id"), "left")

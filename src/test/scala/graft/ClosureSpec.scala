@@ -110,8 +110,8 @@ class ClosureSpec extends AnyFunSuite {
     "fixpoint on random multi-inheritance DAGs (and drops cycles)") {
     val rnd = new scala.util.Random(11)
     def distributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.c3LocalThreshold", "0")
-      try body finally spark.conf.unset("spark.graft.c3LocalThreshold")
+      spark.conf.set("spark.graft.localThreshold", "0")
+      try body finally spark.conf.unset("spark.graft.localThreshold")
     }
     (1 to 3).foreach { _ =>
       // layered DAG: each class inherits 1-3 earlier classes, ordered

@@ -1250,7 +1250,7 @@ class CorpusSpec extends AnyFunSuite {
     // discipline's spec-forced fallback)
     val rel = Corpus.unigramFertility(docs, emRounds = 2, vocabCap = 2,
         maxLen = 8, maxPiece = 4, seedCap = 10, vocabSize = 3,
-        kernelThreshold = 0)
+        localThreshold = 0)
       .as[(String, Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(rel === out)
